@@ -496,12 +496,6 @@ def _impact_order_ranked(ranked: DataFrame, c: int, id_col: str):
     return kept, cutoffs
 
 
-def _impact_order(tc: DataFrame, c: int, id_col: str):
-    """Per-term impact ordering of a bare contribution table (compat
-    shim over _rank_contributions + _impact_order_ranked)."""
-    return _impact_order_ranked(_rank_contributions(tc, id_col), c, id_col)
-
-
 def _indexed_topk(
     tc: DataFrame,
     kept: DataFrame,

@@ -715,13 +715,6 @@ def ngrams_of_words(words: Column, n: int) -> Column:
     )
 
 
-def word_ngrams(col: Column, n: int) -> Column:
-    """All overlapping word n-grams of the normalized text (strict: empty
-    array when the doc has fewer than n words). Convenience form; for hot
-    paths materialize the words column and use ngrams_of_words."""
-    return ngrams_of_words(F.split(normalize_text(col), " "), n)
-
-
 def repetition_signals(
     df: DataFrame,
     text_col: str = "text",

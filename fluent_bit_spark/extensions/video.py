@@ -923,11 +923,6 @@ def _trak_handler(b: bytes, trak_s: int, trak_e: int) -> bytes | None:
     return None
 
 
-def _trak_is_video(b: bytes, trak_s: int, trak_e: int) -> bool:
-    """True when the trak's mdia/hdlr handler_type is 'vide'."""
-    return _trak_handler(b, trak_s, trak_e) == b"vide"
-
-
 def _mp4_collect(
     b: bytes, handler: bytes = b"vide", fallback_first: bool = True
 ) -> dict[bytes, tuple[int, int]] | None:

@@ -97,8 +97,3 @@ def frac_micros(ts: Column) -> Column:
 def frac_millis(ts: Column) -> Column:
     """'%03d' millisecond fraction string (.SSS encoders)."""
     return F.format_string("%03d", (micros_of(ts) / 1000).cast("int"))
-
-
-def frac_nanos(ts: Column) -> Column:
-    """'%09d' nanosecond fraction string (µs-resolution source)."""
-    return F.format_string("%09d", (micros_of(ts) * 1000).cast("long"))

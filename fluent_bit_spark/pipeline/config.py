@@ -9,8 +9,11 @@ inputs   -> batch DataFrames (parquet/json/csv paths) or streaming sources,
 filters  -> operator combinators applied in config order to matching tags
 stream_tasks -> SP-dialect statements executed in an SPContext over the
             tagged union of inputs
-outputs  -> sinks.write_file per matching route (match supports fluent-bit
-            '*' wildcards)
+outputs  -> one delivery per output instance over its matching route
+            (match supports fluent-bit '*' wildcards): a per-plugin shaper
+            turns the records into the plugin's wire payload, written to
+            the instance's path as the stand-in for the push; file, s3,
+            null/counter and stdout deliver on their own
 
 Filters honor `match` exactly like flb_router_match: a filter applies only
 to records whose tag matches its pattern; non-matching records pass through
@@ -20,13 +23,16 @@ where the operator allows it, else filter/union).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import yaml
 
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from fluent_bit_spark import connectors, sinks
 from fluent_bit_spark.model import TAG_COL, TS_COL
 from fluent_bit_spark.sp import SPContext
 from fluent_bit_spark.sp.compiler import tag_pattern_to_regex
@@ -62,409 +68,326 @@ class Pipeline:
         """Tag-pattern route, optionally gated by condition rules — the
         conditional-routing engine (src/flb_router_condition.c:275
         flb_condition_eval_logs over src/flb_conditionals.c rules)."""
-        df = self.source().filter(F.col(TAG_COL).rlike(tag_pattern_to_regex(pattern)))
-        if conds:
-            from fluent_bit_spark.operators.conditions import Rule, conditions
+        return _route(self.source(), pattern, conds, combine)
 
-            rules = [Rule(*c) for c in conds]
-            df = df.filter(conditions(df, rules, combine))
-        return df
+    def run_outputs(self) -> dict[str, int]:
+        """Execute every output route; returns route -> row count written,
+        in declaration order, keyed by match pattern (a pattern already
+        used gets a '+' per earlier use).
 
-    def run_outputs(self, persist_routes: bool = True) -> dict[str, int]:
-        """Execute every output route; returns route -> row count written.
-
-        With more than one output and ``persist_routes`` (default), the
-        filtered source is persisted once and every sink reads the cached
-        partitions — the fluent-bit dataflow (a chunk is ingested/filtered
-        once, then fanned to all matching outputs) instead of K full
-        re-computations of the input scan + filter chain. MEMORY_AND_DISK
-        so an input bigger than executor memory spills instead of OOMing;
-        pass ``persist_routes=False`` to trade re-scan CPU for zero cache
-        footprint (the right call when sinks are few and the filter chain
-        is cheap relative to storage)."""
-        from fluent_bit_spark.sinks import write_file
-
-        written = {}
-
-        def record(out, n):
-            key = out.get("match", "*")
-            while key in written:  # duplicate match patterns stay distinct
-                key += "+"
-            # Observation metrics ride the sink's own write job — one scan
-            # per output instead of a second count() pass over the route.
-            written[key] = int(n.get["n"]) if isinstance(n, Observation) else n
-
-        cached = saved_inputs = None
-        if persist_routes and len(self.outputs) > 1:
-            from pyspark.storagelevel import StorageLevel
-
-            cached = self.source().persist(StorageLevel.MEMORY_AND_DISK)
-            saved_inputs, self.inputs = self.inputs, {"__cached__": cached}
+        With more than one output the source is persisted and filled with
+        one deliberate pass, so every sink reads the cached partitions —
+        the fluent-bit dataflow (a chunk is ingested/filtered once, then
+        fanned to all matching outputs) instead of K full re-computations
+        of the input scan + filter chain. MEMORY_AND_DISK so an input
+        bigger than executor memory spills instead of OOMing. The sinks
+        then write CONCURRENTLY, so each sink's tasks back-fill the
+        executor slots the others' job tails leave idle; pool threads
+        inherit the caller's job group, tags and other local properties.
+        Two sinks sharing a target path run one at a time in declaration
+        order instead (concurrent overwrites of one directory can
+        interleave; the last declared wins). stdout (show()) runs after
+        the other sinks, in declaration order — interleaved console output
+        is not a debugging aid."""
+        src = self.source()
+        fan_out = len(self.outputs) > 1
         try:
-            par = [o for o in self.outputs if o.get("name") != "stdout"]
-            paths = [o.get("path") for o in par if o.get("path") is not None]
-            if len(paths) != len(set(paths)):
-                # two sinks share a target path: concurrent overwrite
-                # writes against one directory can interleave/corrupt it,
-                # so keep the sequential declaration-order semantics
-                # (deterministic last-writer-wins) for this config
-                par = []
-            if len(par) > 1:
-                # independent sinks over the shared cached source: fill
-                # the cache with one deliberate pass, then run the write
-                # jobs CONCURRENTLY so each sink's tasks back-fill the
-                # executor slots the others' job tails leave idle
-                # (fluent-bit's chunk fan-out, overlapped). stdout
-                # (show()) stays sequential — interleaved console output
-                # is not a debugging aid. Results are recorded in
-                # declaration order, so the returned dict is unchanged.
-                from concurrent.futures import ThreadPoolExecutor
-
-                if cached is not None:
-                    cached.count()
-
-                def one(out):
-                    local: dict = {}
-
-                    def rec(_o, n):
-                        local["v"] = (
-                            int(n.get["n"]) if isinstance(n, Observation) else n
-                        )
-
-                    self._run_outputs_inner(local, rec, write_file, [out])
-                    return local.get("v")
-
-                with ThreadPoolExecutor(max_workers=min(8, len(par))) as pool:
-                    vals = dict(zip([id(o) for o in par], pool.map(one, par)))
-                for out in self.outputs:
-                    if out.get("name") == "stdout":
-                        self._run_outputs_inner(written, record, write_file, [out])
-                    else:
-                        record(out, vals[id(out)])
-            else:
-                self._run_outputs_inner(written, record, write_file)
+            if fan_out:
+                src.persist(StorageLevel.MEMORY_AND_DISK).count()
+            pooled = [o for o in self.outputs if o.get("name") != "stdout"]
+            paths = [o["path"] for o in pooled if o.get("path") is not None]
+            workers = 1 if len(paths) != len(set(paths)) else max(1, min(8, len(pooled)))
+            run = inheritable_thread_target(self.spark)(lambda out: _run_output(src, out))
+            with ThreadPoolExecutor(max_workers=workers) as pool:
+                counts = iter(list(pool.map(run, pooled)))
+            written: dict[str, int] = {}
+            for out in self.outputs:
+                n = _run_output(src, out) if out.get("name") == "stdout" else next(counts)
+                key = out.get("match", "*")
+                while key in written:  # duplicate match patterns stay distinct
+                    key += "+"
+                written[key] = n
         finally:
-            if cached is not None:
-                self.inputs = saved_inputs
-                cached.unpersist()
+            if fan_out:
+                src.unpersist()
         return written
 
-    def _run_outputs_inner(self, written, record, write_file, outputs=None) -> None:
-        for out in (self.outputs if outputs is None else outputs):
-            df = self.route(
-                out.get("match", "*"),
-                conds=out.get("conditions"),
-                combine=out.get("condition_op", "AND"),
-            )
-            procs = (out.get("processors") or {}).get("logs") or []
-            if procs:
-                df = _apply_processors(df, procs)
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-            name = out.get("name", "file")
-            if name == "file":
-                write_file(
-                    df,
-                    out["path"],
-                    fmt=out.get("format", "json"),
-                    partition_by_tag=bool(out.get("partition_by_tag", False)),
-                    template=out.get("template"),
-                    compression=out.get("compression"),
-                )
-                record(out, obs)
-            elif name == "s3":
-                from fluent_bit_spark.sinks import write_s3
 
-                write_s3(
-                    df,
-                    out["path"],
-                    key_format=out.get("s3_key_format", "/$TAG"),
-                    fmt=out.get("format", "json"),
-                    compression=out.get("compression"),
-                )
-                record(out, obs)
-            elif name in ("null", "counter"):
-                # no write job to ride — the count IS the action
-                record(out, df.count())
-            elif name == "stdout":
-                # show(limit) stops early, so observe() would undercount;
-                # a debug sink can afford the explicit count
-                df.show(int(out.get("limit", 20)), truncate=False)
-                record(out, df.count())
-            elif name in ("es", "opensearch"):
-                from fluent_bit_spark.connectors import es_bulk
+def _route(df: DataFrame, pattern: str, conds: list | None, combine: str) -> DataFrame:
+    df = df.filter(F.col(TAG_COL).rlike(tag_pattern_to_regex(pattern)))
+    if conds:
+        from fluent_bit_spark.operators.conditions import Rule, conditions
 
-                shaped = es_bulk(
-                    df,
-                    index=out.get("index", "fluent-bit"),
-                    logstash_format=bool(out.get("logstash_format", False)),
-                    logstash_prefix=out.get("logstash_prefix", "logstash"),
-                    id_key=out.get("id_key"),
-                    include_tag_key=out.get("include_tag_key"),
-                )
-                # bulk body = action line + doc line per record
-                body = shaped.select(
-                    F.concat_ws("\n", "action_line", "doc_line").alias("value")
-                )
-                body.write.mode("overwrite").format("text").save(out["path"])
-                record(out, obs)
-            elif name == "splunk":
-                from fluent_bit_spark.connectors import splunk_hec
+        rules = [Rule(*c) for c in conds]
+        df = df.filter(conditions(df, rules, combine))
+    return df
 
-                shaped = splunk_hec(
-                    df,
-                    host=out.get("host"),
-                    source=out.get("source"),
-                    sourcetype=out.get("sourcetype"),
-                    index=out.get("index"),
-                    host_key=out.get("host_key"),
-                    source_key=out.get("source_key"),
-                    send_raw=bool(out.get("send_raw", False)),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "opentelemetry":
-                from fluent_bit_spark.connectors import otlp_logs_encode
 
-                shaped = otlp_logs_encode(
-                    df,
-                    body_col=out.get("body_key", "msg"),
-                    attr_cols=_listopt(out.get("attribute_keys")),
-                    resource_attributes=out.get("resource_attributes"),
-                    batch_col=out.get("batch_key", TAG_COL),
-                )
-                shaped.select("otlp_json").write.mode("overwrite").format("text").save(
-                    out["path"]
-                )
-                record(out, obs)
-            elif name == "loki":
-                from fluent_bit_spark.sinks import loki_streams
+def _run_output(src: DataFrame, out: dict) -> int:
+    """One output instance, the per-output boundary (fluent-bit's
+    cb_flush): route, apply the instance's processors, deliver once and
+    return the delivered record count."""
+    df = _route(src, out.get("match", "*"), out.get("conditions"), out.get("condition_op", "AND"))
+    procs = (out.get("processors") or {}).get("logs") or []
+    if procs:
+        df = _apply_processors(df, procs)
+    # Observation metrics ride the sink's own write job — one scan per
+    # output instead of a second count() pass over the route.
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    name = out.get("name", "file")
+    if name in ("null", "counter"):
+        return df.count()  # no write job to ride — the count IS the action
+    if name == "stdout":
+        # show(limit) stops early, so observe() would undercount;
+        # a debug sink can afford the explicit count
+        df.show(int(out.get("limit", 20)), truncate=False)
+        return df.count()
+    if name == "file":
+        sinks.write_file(
+            df,
+            out["path"],
+            fmt=out.get("format", "json"),
+            partition_by_tag=bool(out.get("partition_by_tag", False)),
+            template=out.get("template"),
+            compression=out.get("compression"),
+        )
+    elif name == "s3":
+        sinks.write_s3(
+            df,
+            out["path"],
+            key_format=out.get("s3_key_format", "/$TAG"),
+            fmt=out.get("format", "json"),
+            compression=out.get("compression"),
+        )
+    else:
+        shaped, fmt = _SHAPERS[name](df, out)
+        shaped.write.mode("overwrite").format(fmt).save(out["path"])
+    return int(obs.get["n"])
 
-                shaped = loki_streams(
-                    df,
-                    label_keys=_listopt(out.get("labels")) or [TAG_COL],
-                    line_col=out.get("line_key", "msg"),
-                )
-                shaped.select(F.to_json(F.struct("stream", "values")).alias("value")).write.mode(
-                    "overwrite"
-                ).format("text").save(out["path"])
-                record(out, obs)
-            elif name == "influxdb":
-                from fluent_bit_spark.connectors import influxdb_line
 
-                shaped = influxdb_line(
-                    df,
-                    field_cols=_listopt(out.get("field_keys")),
-                    tag_keys=_listopt(out.get("tag_keys")),
-                    auto_tags=bool(out.get("auto_tags", False)),
-                    use_influxdb_integer=bool(out.get("add_integer_suffix", False)),
-                )
-                shaped.select(F.col("line").alias("value")).write.mode(
-                    "overwrite"
-                ).format("text").save(out["path"])
-                record(out, obs)
-            elif name == "datadog":
-                from fluent_bit_spark.connectors import datadog_records
+# Per-plugin shapers: (routed records, output config) -> (the plugin's
+# wire payload as a frame, the file format that stands in for the push).
+# A "text" frame has exactly one string column, one payload line per row.
 
-                shaped = datadog_records(
-                    df,
-                    include_tag_key=bool(out.get("include_tag_key", False)),
-                    tag_key=out.get("tag_key", "tagkey"),
-                    dd_source=out.get("dd_source"),
-                    dd_service=out.get("dd_service"),
-                    dd_hostname=out.get("dd_hostname"),
-                    dd_tags=out.get("dd_tags"),
-                    dd_message_key=out.get("dd_message_key", "log"),
-                    remap=bool(out.get("remap", False)),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "flowcounter":
-                from fluent_bit_spark.sinks import flowcounter
 
-                shaped = flowcounter(df, unit=out.get("unit", "minute"))
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "forward":
-                from fluent_bit_spark.connectors import forward_frames_encode
+def _es(df: DataFrame, out: dict):
+    shaped = connectors.es_bulk(
+        df,
+        index=out.get("index", "fluent-bit"),
+        logstash_format=bool(out.get("logstash_format", False)),
+        logstash_prefix=out.get("logstash_prefix", "logstash"),
+        id_key=out.get("id_key"),
+        include_tag_key=out.get("include_tag_key"),
+    )
+    # bulk body = action line + doc line per record
+    return shaped.select(F.concat_ws("\n", "action_line", "doc_line")), "text"
 
-                shaped = forward_frames_encode(
-                    df,
-                    time_as_integer=bool(out.get("time_as_integer", False)),
-                    send_options=bool(out.get("send_options", False)),
-                )
-                shaped.write.mode("overwrite").format("parquet").save(out["path"])
-                record(out, obs)
-            elif name == "cloudwatch_logs":
-                from fluent_bit_spark.connectors import cloudwatch_events
 
-                shaped = cloudwatch_events(
-                    df,
-                    out["log_group_name"],
-                    log_stream_name=out.get("log_stream_name"),
-                    log_stream_prefix=out.get("log_stream_prefix"),
-                    log_key=out.get("log_key"),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "stackdriver":
-                from fluent_bit_spark.connectors import stackdriver_entries
+def _splunk(df: DataFrame, out: dict):
+    return connectors.splunk_hec(
+        df,
+        host=out.get("host"),
+        source=out.get("source"),
+        sourcetype=out.get("sourcetype"),
+        index=out.get("index"),
+        host_key=out.get("host_key"),
+        source_key=out.get("source_key"),
+        send_raw=bool(out.get("send_raw", False)),
+    ), "json"
 
-                shaped = stackdriver_entries(
-                    df,
-                    out.get("google_service_credentials", "default-project"),
-                    severity_key=out.get("severity_key", "severity"),
-                    trace_key=out.get("trace_key"),
-                    span_id_key=out.get("span_id_key"),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "bigquery":
-                from fluent_bit_spark.connectors import bigquery_rows
 
-                shaped = bigquery_rows(df, insert_id_col=out.get("insert_id_key"))
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "kafka":
-                from fluent_bit_spark.connectors import kafka_messages
+def _opentelemetry(df: DataFrame, out: dict):
+    shaped = connectors.otlp_logs_encode(
+        df,
+        body_col=out.get("body_key", "msg"),
+        attr_cols=_listopt(out.get("attribute_keys")),
+        resource_attributes=out.get("resource_attributes"),
+        batch_col=out.get("batch_key", TAG_COL),
+    )
+    return shaped.select("otlp_json"), "text"
 
-                topics = _listopt(out.get("topics", "fluent-bit"))
-                shaped = kafka_messages(
-                    df,
-                    topics,
-                    timestamp_key=out.get("timestamp_key", "@timestamp"),
-                    timestamp_format=out.get("timestamp_format", "double"),
-                    message_key=out.get("message_key"),
-                    message_key_field=out.get("message_key_field"),
-                    topic_key=out.get("topic_key"),
-                    dynamic_topic=bool(out.get("dynamic_topic", False)),
-                    raw_log_key=out.get("raw_log_key"),
-                )
-                # file-backed stand-in for the producer, like the es route
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "http":
-                from fluent_bit_spark.sinks import http_payload
 
-                shaped = http_payload(
-                    df,
-                    body_format=out.get("format", "json"),
-                    json_date_key=out.get("json_date_key", "date"),
-                    json_date_format=out.get("json_date_format", "double"),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name in ("kinesis_streams", "kinesis_firehose"):
-                from fluent_bit_spark.connectors import kinesis_records
+def _loki(df: DataFrame, out: dict):
+    shaped = sinks.loki_streams(
+        df,
+        label_keys=_listopt(out.get("labels")) or [TAG_COL],
+        line_col=out.get("line_key", "msg"),
+    )
+    return shaped.select(F.to_json(F.struct("stream", "values"))), "text"
 
-                shaped = kinesis_records(
-                    df,
-                    log_key=out.get("log_key"),
-                    time_key=out.get("time_key"),
-                    time_key_format=out.get("time_key_format", "%Y-%m-%dT%H:%M:%S"),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "azure":
-                from fluent_bit_spark.connectors import azure_records
 
-                shaped = azure_records(
-                    df,
-                    time_key=out.get("time_key", "@timestamp"),
-                    time_generated=bool(out.get("time_generated", False)),
-                    log_type=out.get("log_type", "fluentbit"),
-                    log_type_key=out.get("log_type_key"),
-                )
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "logdna":
-                from fluent_bit_spark.connectors import logdna_lines
+def _influxdb(df: DataFrame, out: dict):
+    shaped = connectors.influxdb_line(
+        df,
+        field_cols=_listopt(out.get("field_keys")),
+        tag_keys=_listopt(out.get("tag_keys")),
+        auto_tags=bool(out.get("auto_tags", False)),
+        use_influxdb_integer=bool(out.get("add_integer_suffix", False)),
+    )
+    return shaped.select("line"), "text"
 
-                shaped = logdna_lines(df, app=out.get("app", "Fluent Bit"))
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "nats":
-                from fluent_bit_spark.connectors import nats_body
 
-                shaped = nats_body(df)
-                shaped.write.mode("overwrite").format("json").save(out["path"])
-                record(out, obs)
-            elif name == "slack":
-                from fluent_bit_spark.connectors import slack_text
+def _datadog(df: DataFrame, out: dict):
+    return connectors.datadog_records(
+        df,
+        include_tag_key=bool(out.get("include_tag_key", False)),
+        tag_key=out.get("tag_key", "tagkey"),
+        dd_source=out.get("dd_source"),
+        dd_service=out.get("dd_service"),
+        dd_hostname=out.get("dd_hostname"),
+        dd_tags=out.get("dd_tags"),
+        dd_message_key=out.get("dd_message_key", "log"),
+        remap=bool(out.get("remap", False)),
+    ), "json"
 
-                shaped = slack_text(df)
-                shaped.select(F.col("payload").alias("value")).write.mode(
-                    "overwrite"
-                ).format("text").save(out["path"])
-                record(out, obs)
-            elif name == "td":
-                from fluent_bit_spark.connectors import td_records
 
-                td_records(df).write.mode("overwrite").format("parquet").save(out["path"])
-                record(out, obs)
-            elif name == "prometheus_remote_write":
-                from fluent_bit_spark.connectors import remote_write_encode
+def _forward(df: DataFrame, out: dict):
+    return connectors.forward_frames_encode(
+        df,
+        time_as_integer=bool(out.get("time_as_integer", False)),
+        send_options=bool(out.get("send_options", False)),
+    ), "parquet"
 
-                shaped = remote_write_encode(
-                    df,
-                    name_col=out.get("metric_key", "metric"),
-                    label_cols=_listopt(out.get("label_keys")),
-                    value_col=out.get("value_key", "value"),
-                )
-                shaped.write.mode("overwrite").format("parquet").save(out["path"])
-                record(out, obs)
-            elif name == "prometheus_exporter":
-                from fluent_bit_spark.sinks import prometheus_exposition
 
-                statics = {}
-                for kv in _listopt(out.get("add_label")) or []:
-                    k, _, v = str(kv).partition(" ")
-                    statics[k.strip()] = v.strip()
-                shaped = prometheus_exposition(
-                    df,
-                    name_col=out.get("metric_key", "metric_name"),
-                    type_col=out.get("type_key", "metric_type"),
-                    label_cols=_listopt(out.get("label_keys")),
-                    value_col=out.get("value_key", "value"),
-                    add_labels=statics or None,
-                    value_fmt=out.get("value_format", "double"),
-                )
-                shaped.select(F.col("line").alias("value")).write.mode(
-                    "overwrite"
-                ).format("text").save(out["path"])
-                record(out, obs)
-            elif name == "plot":
-                from fluent_bit_spark.sinks import plot_lines
+def _cloudwatch_logs(df: DataFrame, out: dict):
+    return connectors.cloudwatch_events(
+        df,
+        out["log_group_name"],
+        log_stream_name=out.get("log_stream_name"),
+        log_stream_prefix=out.get("log_stream_prefix"),
+        log_key=out.get("log_key"),
+    ), "json"
 
-                shaped = plot_lines(df, out["key"])
-                shaped.select(F.col("line").alias("value")).write.mode(
-                    "overwrite"
-                ).format("text").save(out["path"])
-                record(out, obs)
-            elif name == "syslog":
-                from fluent_bit_spark.sinks import syslog_encode
 
-                shaped = syslog_encode(
-                    df,
-                    format=out.get("syslog_format", "rfc5424"),
-                    message_key=out.get("syslog_message_key", "message"),
-                    hostname_key=out.get("syslog_hostname_key"),
-                    appname_key=out.get("syslog_appname_key"),
-                    procid_key=out.get("syslog_procid_key"),
-                    msgid_key=out.get("syslog_msgid_key"),
-                    sd_keys=_listopt(out.get("syslog_sd_key")),
-                    severity_key=out.get("syslog_severity_key"),
-                    facility_key=out.get("syslog_facility_key"),
-                    severity_preset=int(out.get("syslog_severity_preset", 6)),
-                    facility_preset=int(out.get("syslog_facility_preset", 1)),
-                    maxsize=out.get("syslog_maxsize"),
-                )
-                shaped.select(F.col("line").alias("value")).write.mode(
-                    "overwrite"
-                ).format("text").save(out["path"])
-                record(out, obs)
-            else:
-                raise ValueError(f"unknown output plugin {name!r}")
+def _stackdriver(df: DataFrame, out: dict):
+    return connectors.stackdriver_entries(
+        df,
+        out.get("google_service_credentials", "default-project"),
+        severity_key=out.get("severity_key", "severity"),
+        trace_key=out.get("trace_key"),
+        span_id_key=out.get("span_id_key"),
+    ), "json"
+
+
+def _kafka(df: DataFrame, out: dict):
+    return connectors.kafka_messages(
+        df,
+        _listopt(out.get("topics", "fluent-bit")),
+        timestamp_key=out.get("timestamp_key", "@timestamp"),
+        timestamp_format=out.get("timestamp_format", "double"),
+        message_key=out.get("message_key"),
+        message_key_field=out.get("message_key_field"),
+        topic_key=out.get("topic_key"),
+        dynamic_topic=bool(out.get("dynamic_topic", False)),
+        raw_log_key=out.get("raw_log_key"),
+    ), "json"
+
+
+def _http(df: DataFrame, out: dict):
+    return sinks.http_payload(
+        df,
+        body_format=out.get("format", "json"),
+        json_date_key=out.get("json_date_key", "date"),
+        json_date_format=out.get("json_date_format", "double"),
+    ), "json"
+
+
+def _kinesis(df: DataFrame, out: dict):
+    return connectors.kinesis_records(
+        df,
+        log_key=out.get("log_key"),
+        time_key=out.get("time_key"),
+        time_key_format=out.get("time_key_format", "%Y-%m-%dT%H:%M:%S"),
+    ), "json"
+
+
+def _azure(df: DataFrame, out: dict):
+    return connectors.azure_records(
+        df,
+        time_key=out.get("time_key", "@timestamp"),
+        time_generated=bool(out.get("time_generated", False)),
+        log_type=out.get("log_type", "fluentbit"),
+        log_type_key=out.get("log_type_key"),
+    ), "json"
+
+
+def _prometheus_remote_write(df: DataFrame, out: dict):
+    return connectors.remote_write_encode(
+        df,
+        name_col=out.get("metric_key", "metric"),
+        label_cols=_listopt(out.get("label_keys")),
+        value_col=out.get("value_key", "value"),
+    ), "parquet"
+
+
+def _prometheus_exporter(df: DataFrame, out: dict):
+    statics = {}
+    for kv in _listopt(out.get("add_label")) or []:
+        k, _, v = str(kv).partition(" ")
+        statics[k.strip()] = v.strip()
+    shaped = sinks.prometheus_exposition(
+        df,
+        name_col=out.get("metric_key", "metric_name"),
+        type_col=out.get("type_key", "metric_type"),
+        label_cols=_listopt(out.get("label_keys")),
+        value_col=out.get("value_key", "value"),
+        add_labels=statics or None,
+        value_fmt=out.get("value_format", "double"),
+    )
+    return shaped.select("line"), "text"
+
+
+def _syslog(df: DataFrame, out: dict):
+    shaped = sinks.syslog_encode(
+        df,
+        format=out.get("syslog_format", "rfc5424"),
+        message_key=out.get("syslog_message_key", "message"),
+        hostname_key=out.get("syslog_hostname_key"),
+        appname_key=out.get("syslog_appname_key"),
+        procid_key=out.get("syslog_procid_key"),
+        msgid_key=out.get("syslog_msgid_key"),
+        sd_keys=_listopt(out.get("syslog_sd_key")),
+        severity_key=out.get("syslog_severity_key"),
+        facility_key=out.get("syslog_facility_key"),
+        severity_preset=int(out.get("syslog_severity_preset", 6)),
+        facility_preset=int(out.get("syslog_facility_preset", 1)),
+        maxsize=out.get("syslog_maxsize"),
+    )
+    return shaped.select("line"), "text"
+
+
+_SHAPERS = {
+    "es": _es,
+    "opensearch": _es,
+    "splunk": _splunk,
+    "opentelemetry": _opentelemetry,
+    "loki": _loki,
+    "influxdb": _influxdb,
+    "datadog": _datadog,
+    "flowcounter": lambda df, out: (sinks.flowcounter(df, unit=out.get("unit", "minute")), "json"),
+    "forward": _forward,
+    "cloudwatch_logs": _cloudwatch_logs,
+    "stackdriver": _stackdriver,
+    "bigquery": lambda df, out: (
+        connectors.bigquery_rows(df, insert_id_col=out.get("insert_id_key")), "json"
+    ),
+    "kafka": _kafka,
+    "http": _http,
+    "kinesis_streams": _kinesis,
+    "kinesis_firehose": _kinesis,
+    "azure": _azure,
+    "logdna": lambda df, out: (connectors.logdna_lines(df, app=out.get("app", "Fluent Bit")), "json"),
+    "nats": lambda df, out: (connectors.nats_body(df), "json"),
+    "slack": lambda df, out: (connectors.slack_text(df).select("payload"), "text"),
+    "td": lambda df, out: (connectors.td_records(df), "parquet"),
+    "prometheus_remote_write": _prometheus_remote_write,
+    "prometheus_exporter": _prometheus_exporter,
+    "plot": lambda df, out: (sinks.plot_lines(df, out["key"]).select("line"), "text"),
+    "syslog": _syslog,
+}
+# file, s3, null/counter and stdout deliver on their own in _run_output
+_OUTPUT_PLUGINS = frozenset(_SHAPERS) | {"file", "s3", "null", "counter", "stdout"}
 
 
 def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
@@ -643,20 +566,7 @@ def _apply_filter(df: DataFrame, fconf: dict, parsers: dict) -> DataFrame:
             out = out.withColumn(fconf["flag_key"], pii_flags(F.col(key), kinds))
         out = out.withColumn(key, redact_pii(F.col(key), kinds))
     elif name == "content_modifier":
-        from fluent_bit_spark.operators.conditions import Rule
-        from fluent_bit_spark.operators.content_modifier import content_modifier
-
-        conds = [Rule(*c) for c in fconf.get("conditions", [])]
-        out = content_modifier(
-            hit,
-            action=fconf["action"],
-            key=fconf["key"],
-            value=fconf.get("value"),
-            pattern=fconf.get("pattern"),
-            converted_type=fconf.get("converted_type"),
-            conds=conds or None,
-            combine=fconf.get("condition_op", "AND"),
-        )
+        out = _apply_processors(hit, [fconf])
     elif name == "log_to_metrics":
         # filter_log_to_metrics swaps matching log records for metric
         # records on the stream (log_to_metrics.c:970-1283); the derived
@@ -832,6 +742,10 @@ def load_pipeline(spark: SparkSession, conf: str | dict) -> Pipeline:
         else:
             conf = yaml.safe_load(text)
 
+    outputs = conf.get("pipeline", {}).get("outputs", [])
+    for out in outputs:  # before any input is read or sink written
+        if out.get("name", "file") not in _OUTPUT_PLUGINS:
+            raise ValueError(f"unknown output plugin {out.get('name')!r}")
     parsers = {p["name"]: _build_parser(p) for p in conf.get("parsers", [])}
     pipe = Pipeline(spark=spark)
 
@@ -947,5 +861,5 @@ def load_pipeline(spark: SparkSession, conf: str | dict) -> Pipeline:
         else:
             pipe.sp.sql(task["exec"])
 
-    pipe.outputs = conf.get("pipeline", {}).get("outputs", [])
+    pipe.outputs = outputs
     return pipe

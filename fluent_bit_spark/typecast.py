@@ -55,6 +55,8 @@ def cast_column(col: Column, to_type: str, mode: str = "parser") -> Column:
     # NULL input (absent key / unmatched extraction) stays NULL in every
     # mode — the C parsers only typecast values that exist.
     t = to_type.lower()
+    if t == "integer":  # the spelling fluent-bit's parser docs use
+        t = "int"
     err_zero = mode == "converter"  # flb_typecast: parsed 0 == error
     if t == "uint" and err_zero:
         # strtoumax (flb_typecast.c:111): a SIGN IS accepted and a negative

@@ -132,6 +132,9 @@ def test_cli_main(spark, tmp_path):
     assert cli.main(["-c", str(cpath), "--dry-run"]) == 0
     assert cli.main(["-c", str(cpath), "--json"]) == 0
     assert cli.main(["-c", str(tmp_path / "missing.conf")]) == 2
+    bad = tmp_path / "bad.conf"
+    bad.write_text(conf + "\n[OUTPUT]\n    Name  nosuch\n    Match *\n")
+    assert cli.main(["-c", str(bad), "--dry-run"]) == 2
 
 
 def test_crawl_pipeline_example(spark, tmp_path):

@@ -71,9 +71,9 @@ def test_logfmt_parser(spark):
 def test_ltsv_parser(spark):
     df = spark.createDataFrame([Row(line="host:web1\tstatus:200\tsize:1024")])
     out = parser_filter(df, "line", LtsvParser(), fields=["host", "status", "size"],
-                        types={"status": "int"})
+                        types={"status": "int", "size": "integer"})
     r = out.collect()[0]
-    assert r.host == "web1" and r.status == 200
+    assert r.host == "web1" and r.status == 200 and r.size == 1024
 
 
 def test_json_parser_typed(spark):

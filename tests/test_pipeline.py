@@ -89,6 +89,74 @@ def test_conditional_output_routes(spark):
     assert written == {"svc.*": 1, "svc.*+": 3}
 
 
+def test_output_keys_order_and_shared_path(spark, tmp_path):
+    """Duplicate match patterns get one '+' per earlier use, in declaration
+    order; two sinks sharing a path run one at a time, so the one declared
+    last wins; stdout runs after the other sinks but reports in its
+    declared slot."""
+    shared = str(tmp_path / "shared")
+
+    def writer(v):
+        return {"logs": [{"name": "content_modifier", "action": "insert",
+                          "key": "writer", "value": v}]}
+
+    conf = {
+        "pipeline": {
+            "inputs": [
+                {"name": "dummy", "tag": "svc.a",
+                 "records": [{"level": "error"}, {"level": "info"}, {"level": "info"}]},
+            ],
+            "outputs": [
+                {"name": "file", "match": "*", "path": shared, "processors": writer("first")},
+                {"name": "stdout", "match": "*", "conditions": [["level", "eq", "error"]]},
+                {"name": "file", "match": "*", "path": shared, "processors": writer("last")},
+                {"name": "null", "match": "*"},
+            ],
+        },
+    }
+    written = load_pipeline(spark, conf).run_outputs()
+    assert list(written.items()) == [("*", 3), ("*+", 1), ("*++", 3), ("*+++", 3)]
+    assert {r.writer for r in spark.read.json(shared).collect()} == {"last"}
+
+
+def test_run_outputs_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """Sinks written from pool threads inherit the caller's job group, so
+    cancelJobGroup and per-group attribution reach every job of a run."""
+    conf = {
+        "pipeline": {
+            "inputs": [{"name": "dummy", "tag": "svc.a", "records": [{"n": 1}, {"n": 2}]}],
+            "outputs": [
+                {"name": "file", "match": "*", "path": str(tmp_path / "a")},
+                {"name": "file", "match": "*", "path": str(tmp_path / "b"), "format": "csv"},
+            ],
+        },
+    }
+    pipe = load_pipeline(spark, conf)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("run-outputs", "job group inheritance")
+    try:
+        assert pipe.run_outputs() == {"*": 2, "*+": 2}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert len(tracker.getJobIdsForGroup("run-outputs")) >= 3  # fill + 2 writes
+
+
+def test_unknown_output_plugin_fails_at_load(spark):
+    import pytest as _pytest
+
+    conf = {
+        "pipeline": {
+            "inputs": [{"name": "dummy", "tag": "svc.a", "records": [{"n": 1}]}],
+            "outputs": [{"name": "null", "match": "*"}, {"name": "nosuch", "match": "*"}],
+        },
+    }
+    with _pytest.raises(ValueError, match="unknown output plugin 'nosuch'"):
+        load_pipeline(spark, conf)
+
+
 def test_connector_output_plugins(spark, tmp_path):
     """es/splunk/opentelemetry/loki outputs write their wire payloads
     (file-backed stand-ins for the HTTP push)."""
